@@ -438,7 +438,13 @@ object Bench {
     // parses their full line and must not mistake a compact line for
     // a board).
     if (!sys.env.contains("SPARK_GRAFT_SHARD")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      // a JSON number, or null for a non-numeric SPARK_GRAFT_CPUS
+      val cpusEnv = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      val cpus = cpusEnv.trim.toIntOption.map(_.toString).getOrElse {
+        System.err.println(s"[bench] SPARK_GRAFT_CPUS='$cpusEnv' is not an integer; " +
+          "the summary line reports cpus null")
+        "null"
+      }
       val compact = f"""{"phase":"${phase.getOrElse("final")}","metric":"total","value":$total%.3f${firstPassTotal.map(t => f""","total_single_pass":$t%.3f""").getOrElse("")},"unit":"sec","n":${results.size},"errors":$errs,"cpus":$cpus,"btime":$bootTime,"sf":"$sfDir"}"""
       println(compact)
     }

@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** At-rest layout of the canonical long table (FIXTURES.md §1 DDL):
   * parquet partitioned by UTC day of the tick, rows clustered by
@@ -17,13 +18,27 @@ import org.apache.spark.sql.functions._
   *    classId/labelsId rowkey prefix;
   *  - DELTA_BINARY_PACKED on sorted `ts` replaces GTSEncoder's
   *    per-point delta compression (SURVEY §1.1).
+  *
+  * The at-rest schema is declared by the writer and never inferred at
+  * read time: [[write]] accepts only `Gts.pointSchema` frames and
+  * [[read]] hands Spark [[schema]]. Parquet schema inference runs a
+  * Spark job (a footer merge) on every read, which FETCH would pay on
+  * every request before its real plan exists.
   */
 object LongTable {
 
   val DayMicros: Long = 86400000000L
 
-  /** Write points in the canonical at-rest layout. */
-  def write(points: DataFrame, path: String): Unit =
+  /** The lake's schema: the point columns, then the `tsday` partition
+    * column (partition values live in directory names, so its type
+    * exists only here). */
+  val schema: StructType = Gts.pointSchema.add(StructField("tsday", LongType))
+
+  /** Write points in the canonical at-rest layout. The input must have
+    * exactly `Gts.pointSchema`'s columns, in order and with its types
+    * (nullability aside), so [[schema]] describes every file written. */
+  def write(points: DataFrame, path: String): Unit = {
+    requirePointSchema(points)
     points
       .withColumn("tsday", (col("ts") / DayMicros).cast("long"))
       .repartition(col("tsday"))
@@ -31,9 +46,34 @@ object LongTable {
       .write.mode("overwrite")
       .partitionBy("tsday")
       .parquet(path)
+  }
 
+  /** Schema equality on the driver (no job): names, order and types. */
+  private def requirePointSchema(points: DataFrame): Unit = {
+    def shape(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
+    val want = shape(Gts.pointSchema)
+    val got = shape(points.schema)
+    if (got != want) {
+      val wantTypes = want.toMap
+      val gotTypes = got.toMap
+      val problems = Seq(
+        "extra" -> got.collect { case (n, _) if !wantTypes.contains(n) => n },
+        "missing" -> want.collect { case (n, _) if !gotTypes.contains(n) => n },
+        "mistyped" -> got.collect { case (n, t) if wantTypes.get(n).exists(_ != t) =>
+          s"$n: $t (expected ${wantTypes(n)})" })
+        .collect { case (k, cols) if cols.nonEmpty => s"$k column(s) ${cols.mkString(", ")}" }
+      throw new IllegalArgumentException(
+        "LongTable.write: input does not match Gts.pointSchema: " +
+          (if (problems.isEmpty) s"column order ${got.map(_._1).mkString(", ")}"
+          else problems.mkString("; ")) + " (normalize with Gts.canonical)")
+    }
+  }
+
+  /** The lake under the declared [[schema]]: planning lists the
+    * directories but runs no Spark job. An empty lake is an empty
+    * frame. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(schema).parquet(path)
 
   /** FETCH-range scan: the tsday predicate prunes partitions, the ts
     * predicate prunes row groups; both reach the scan node. */

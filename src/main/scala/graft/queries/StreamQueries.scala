@@ -77,10 +77,6 @@ object StreamQueries {
       s"run-$runToken", s"$key-${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
     val done = root.resolve("_DONE")
     val data = root.resolve("data")
-    def deleteTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => Files.deleteIfExists(q))
     this.synchronized {
       if (!Files.exists(done)) {
         // wipe any partial build, then write fresh + mark complete
@@ -88,12 +84,26 @@ object StreamQueries {
         Files.createDirectories(root)
         build(data.toString)
         Files.createFile(done)
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try deleteTree(root.getParent) catch { case _: Throwable => }))
+        if (!runRootHooked) {
+          val runRoot = root.getParent
+          Runtime.getRuntime.addShutdownHook(new Thread(() =>
+            try deleteTree(runRoot) catch { case _: Throwable => }))
+          runRootHooked = true
+        }
       }
     }
     data.toString
   }
+  // one cleanup hook per run root (it deletes every input of the run)
+  private var runRootHooked = false
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(q => Files.deleteIfExists(q))
+      finally walk.close()
+    }
 
   /** Full events table as single-file line protocol (s01/s05/s06). */
   private def evLinesInput(s: SparkSession, dir: String): String =

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.model.Gts
+
 /** Fetch output formats (reference: /api/v0/fetch formats text/fulltext/
   * raw/wrapper/json/tsv/fulltsv, EgressFetchHandler.java:1077-1089) —
   * each format is a Column projection over the canonical long table, so
@@ -61,13 +63,28 @@ object Formats {
     * (class{labels} prefix kept even under compression). */
   def toFullText(points: DataFrame): DataFrame = toGtsLines(points)
 
-  /** "json": one JSON object per point. */
-  def toJsonRows(points: DataFrame): DataFrame =
+  /** "json": one JSON object per point. Also renders the flattened
+    * `(bylabels..., ts, vdouble|vstring)` frames REDUCE and APPLY leave
+    * on the stack: absent point columns read as null, a missing class
+    * as "", and missing labels are built from the non-point columns. */
+  def toJsonRows(points: DataFrame): DataFrame = {
+    val have = points.columns.toSet
+    def opt(name: String, t: DataType): Column =
+      if (have(name)) col(name) else lit(null).cast(t)
+    val labels =
+      if (have("labels")) col("labels")
+      else points.columns.filterNot(Gts.columns.contains) match {
+        case Array() => map().cast(MapType(StringType, StringType))
+        case by => map(by.toSeq.flatMap(c => Seq(lit(c), col(c).cast(StringType))): _*)
+      }
     points.select(to_json(struct(
-      col("class").as("c"), col("labels").as("l"), col("ts").as("t"),
-      col("lat"), col("lon"), col("elev"),
-      coalesce(col("vdouble"), col("vlong").cast(DoubleType)).as("v"),
-      col("vstring").as("s"), col("vbool").as("b"))).as("value"))
+      (if (have("class")) col("class") else lit("")).as("c"), labels.as("l"),
+      col("ts").as("t"),
+      opt("lat", DoubleType).as("lat"), opt("lon", DoubleType).as("lon"),
+      opt("elev", LongType).as("elev"),
+      coalesce(opt("vdouble", DoubleType), opt("vlong", LongType).cast(DoubleType)).as("v"),
+      opt("vstring", StringType).as("s"), opt("vbool", BooleanType).as("b"))).as("value"))
+  }
 
   /** "tsv": ts, value (per-series files at scale); "fulltsv" adds
     * class+labels columns. */

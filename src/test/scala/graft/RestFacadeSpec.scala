@@ -15,12 +15,14 @@ import graft.surface.RestFacade
   * selector + range in each format, exec with a WarpScript program. */
 class RestFacadeSpec extends SparkSpec {
 
-  private def fixture = {
+  private def fixture: GtsFrame = fixtureOf(
+    ("m.cpu", Map("host" -> "a"), 100L, 1.0),
+    ("m.cpu", Map("host" -> "b"), 200L, 2.0),
+    ("m.mem", Map("host" -> "a"), 300L, 3.0))
+
+  private def fixtureOf(points: (String, Map[String, String], Long, Double)*) = {
     import spark.implicits._
-    GtsFrame(Gts.canonical(Seq(
-      ("m.cpu", Map("host" -> "a"), 100L, 1.0),
-      ("m.cpu", Map("host" -> "b"), 200L, 2.0),
-      ("m.mem", Map("host" -> "a"), 300L, 3.0))
+    GtsFrame(Gts.canonical(points.toSeq
       .toDF("class", "labels", "ts", "vdouble")
       .withColumn("lat", lit(null).cast(DoubleType))
       .withColumn("lon", lit(null).cast(DoubleType))
@@ -157,6 +159,37 @@ class RestFacadeSpec extends SparkSpec {
         "{ 'e' 5 'a' 1 'c' 3 'b' 2 'd' 4 }")
       assert(c6 == 200 &&
         big == "[{\"a\":1,\"b\":2,\"c\":3,\"d\":4,\"e\":5}]")
+    } finally facade.stop()
+  }
+
+  test("exec: REDUCE and APPLY results render with their group labels") {
+    // four series on one tick, two classes × two hosts in one dc
+    val f = fixtureOf(
+      ("m.cpu", Map("host" -> "a", "dc" -> "x"), 100L, 1.0),
+      ("m.cpu", Map("host" -> "b", "dc" -> "x"), 100L, 2.0),
+      ("m.mem", Map("host" -> "a", "dc" -> "x"), 100L, 5.0),
+      ("m.mem", Map("host" -> "b", "dc" -> "x"), 100L, 7.0))
+    val facade = new RestFacade(f,
+      () => new WarpScriptEngine(
+        (cls, labels, a, b) => f.select(cls, labels).timeclip(a, b)))
+    val port = facade.start()
+    val exec = s"http://127.0.0.1:$port/api/v0/exec"
+    // the flattened (bylabels..., ts, vdouble) frame has no class or
+    // labels column: c renders "", l holds the group-by labels
+    def rows(body: String) = body.stripPrefix("[[").stripSuffix("]]")
+      .split("(?<=\\}),(?=\\{\"c\")").toSeq.sorted
+    try {
+      val (cr, reduced) = post(exec,
+        "[ [ 'm.cpu' { } 1000 1001 ] FETCH [ 'dc' ] reducer.sum ] REDUCE")
+      assert(cr == 200, reduced)
+      assert(rows(reduced) == Seq("""{"c":"","l":{"dc":"x"},"t":100,"v":3.0}"""))
+      val (ca, applied) = post(exec,
+        "[ [ [ 'm.cpu' { } 1000 1001 ] FETCH ] [ [ 'm.mem' { } 1000 1001 ] FETCH ] " +
+          "[ 'host' ] op.sub ] APPLY")
+      assert(ca == 200, applied)
+      assert(rows(applied) == Seq(
+        """{"c":"","l":{"host":"a"},"t":100,"v":-4.0}""",
+        """{"c":"","l":{"host":"b"},"t":100,"v":-5.0}"""))
     } finally facade.stop()
   }
 

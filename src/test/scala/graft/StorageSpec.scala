@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.{Gts, LongTable}
 import graft.plans.BucketEnd
@@ -30,6 +34,87 @@ class StorageSpec extends SparkSpec {
       plan.contains("tsday"), "tsday must appear as a partition filter")
     // and the ts row-group filter is pushed
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(ts"))
+  }
+
+  /** Types with every field and map value nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      StructField(f.name, nullable(f.dataType), nullable = true)))
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), true)
+    case o => o
+  }
+
+  /** Spark jobs the calling thread starts while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.job") == tag)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.job", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.spec.job", null)
+      ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("long table schema is declared: matches what write lays down, " +
+    "and FETCH plans without a Spark job") {
+    val pts = gtsOf((1 to 40).map(i =>
+      ("m.s", s"u${i % 4}", i.toLong * 21600000000L, i.toDouble)): _*)
+    val dir = Files.createTempDirectory("graft-longtable-schema").toFile.getAbsolutePath
+    LongTable.write(pts, dir)
+
+    // round trip: the schema Spark infers from the files equals the
+    // declared one. Partition values are bare directory names, from
+    // which Spark infers the narrowest integral type, so tsday's type
+    // is checked on the declared side only.
+    val inferred = nullable(spark.read.parquet(dir).schema).asInstanceOf[StructType]
+    val declared = nullable(LongTable.schema).asInstanceOf[StructType]
+    assert(inferred.fieldNames.toSeq === declared.fieldNames.toSeq)
+    assert(inferred.filter(_.name != "tsday") === declared.filter(_.name != "tsday"))
+    assert(inferred("tsday").dataType === IntegerType)
+    assert(declared("tsday").dataType === LongType)
+    assert(LongTable.read(spark, dir).schema === declared)
+
+    // inference runs a job; the declared read plans without one
+    val t0 = 2 * 86400000000L; val t1 = 4 * 86400000000L - 1
+    assert(jobsDuring(spark.read.parquet(dir).schema) >= 1)
+    var plan = ""
+    assert(jobsDuring {
+      plan = LongTable.fetchRange(spark, dir, t0, t1).queryExecution.executedPlan.toString
+    } === 0)
+    assert(plan.contains("PartitionFilters") && plan.contains("tsday"), plan)
+    assert(LongTable.fetchRange(spark, dir, t0, t1).count() ===
+      pts.filter(col("ts") >= t0 && col("ts") <= t1).count())
+
+    // an empty lake reads as an empty frame, not an inference failure
+    val empty = Files.createTempDirectory("graft-longtable-empty").toFile.getAbsolutePath
+    LongTable.write(pts.limit(0), empty)
+    assert(LongTable.fetchRange(spark, empty, t0, t1).count() === 0)
+  }
+
+  test("long table write rejects frames that are not Gts.pointSchema") {
+    val pts = gtsOf(("m.s", "u0", 1000L, 1.0))
+    val dir = Files.createTempDirectory("graft-longtable-reject").toFile.getAbsolutePath
+    val extra = intercept[IllegalArgumentException](
+      LongTable.write(pts.withColumn("note", lit("x")), dir))
+    assert(extra.getMessage.contains("extra column(s) note"), extra.getMessage)
+    val mistyped = intercept[IllegalArgumentException](
+      LongTable.write(pts.withColumn("vdouble", col("vdouble").cast("string")), dir))
+    assert(mistyped.getMessage.contains("mistyped column(s) vdouble: string (expected double)"),
+      mistyped.getMessage)
+    val missing = intercept[IllegalArgumentException](
+      LongTable.write(pts.drop("elev"), dir))
+    assert(missing.getMessage.contains("missing column(s) elev"), missing.getMessage)
+    assert(!new java.io.File(dir).list().exists(_.startsWith("tsday=")))
   }
 
   test("bucket_end custom expression: exact, codegen'd, SQL-callable") {
