@@ -1,5 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -18,16 +22,6 @@ import org.apache.spark.sql.SparkSession
   * its own cost plus 1/60th of one JVM's warmup.
   */
 object Bench {
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   def main(args: Array[String]): Unit = {
     val isChild = sys.env.contains("SPARK_GRAFT_SHARD")
     val noFork = sys.env.get("SPARK_GRAFT_NOFORK").exists(_ == "1")
@@ -52,6 +46,10 @@ object Bench {
     val cp = sys.props.getOrElse("java.class.path", "")
     val javaBin = new java.io.File(
       new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
+    // the parent's own module opens (build.sbt's jdk17AddOpens, which
+    // sbt's forked run starts this JVM with) — the one copy of the list
+    val addOpens = ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens="))
     val pb = new ProcessBuilder(
       (Seq(javaBin) ++ addOpens ++ Seq(
         s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
@@ -243,40 +241,7 @@ object Bench {
                            forked: Boolean = sys.env.contains("SPARK_GRAFT_SHARD")): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (r13, guide §2.2/§2.5): the default 1 MB
-      // minPartitionSize coalesces small-BYTE shuffles to one
-      // partition even when they are CPU-heavy — post-aggregation
-      // kernel stages (per-series ESD/SAX/window work) are series-
-      // count-sized at ANY corpus scale, and their heavy stage ran as
-      // ONE task on 32 cores (g94 profile: 4.6 s single-task stage;
-      // steady-state 4.7 → 1.6 s with the floor lowered). With
-      // parallelismFirst (default on) the target stays
-      // max(bytes/parallelism, this), so at real scale, byte-sized
-      // stages coalesce exactly as before — the floor only stops
-      // degenerate serialization of tiny-byte CPU-bound stages.
-      // Parameterised for cluster profiles; local default 1k.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1k"))
-      // Spark 4.1 writes a sidecar checksum file per checkpoint file —
-      // one per STATE PARTITION per micro-batch — doubling the
-      // small-file create+rename ops of every stateful commit (r14
-      // thread sampling: ChecksumCheckpointFileManager.awaitResult +
-      // renameTempFile dominated the stateful stages; s03 4.1 → 2.6 s,
-      // s04 2.1 → 1.6 s with it off). The cost is per-file and exists
-      // at every scale — worse on object stores, whose integrity layer
-      // (HDFS block checksums, S3 ETags) already covers corruption.
-      // Parameterised for deployments that want the extra guard.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_CHECKSUM", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "2g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
 
     // JVM/codegen warmup on the smallest sf so measured times are steady
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
@@ -346,6 +311,44 @@ object Bench {
       firstPassTotal =
         if (forked) None else Some(firstPass.map(_._2).filter(_ >= 0).sum))
     spark.stop()
+  }
+
+  // Stays right after runInProcess: perfbench/run.py:bench_confs reads the config calls from there to the first getOrCreate.
+  /** The session every entry point runs on (Bench, Verify, Dev): one
+    * conf source, so what a profile or the oracle dump sees is the
+    * configuration the board times. Sets the log level to WARN. */
+  private[graft] def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      // AQE coalescing floor (r13, guide §2.2/§2.5): the default 1 MB
+      // minPartitionSize coalesces small-BYTE shuffles to one
+      // partition even when they are CPU-heavy — post-aggregation
+      // kernel stages (per-series ESD/SAX/window work) are series-
+      // count-sized at ANY corpus scale, and their heavy stage ran as
+      // ONE task on 32 cores (g94 profile: 4.6 s single-task stage;
+      // steady-state 4.7 → 1.6 s with the floor lowered). With
+      // parallelismFirst (default on) the target stays
+      // max(bytes/parallelism, this), so at real scale, byte-sized
+      // stages coalesce exactly as before — the floor only stops
+      // degenerate serialization of tiny-byte CPU-bound stages.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1k")
+      // Spark 4.1 writes a sidecar checksum file per checkpoint file —
+      // one per STATE PARTITION per micro-batch — doubling the
+      // small-file create+rename ops of every stateful commit (r14
+      // thread sampling: ChecksumCheckpointFileManager.awaitResult +
+      // renameTempFile dominated the stateful stages; s03 4.1 → 2.6 s,
+      // s04 2.1 → 1.6 s with it off). The cost is per-file and exists
+      // at every scale — worse on object stores, whose integrity layer
+      // (HDFS block checksums, S3 ETags) already covers corruption.
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.driver.maxResultSize", "2g")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   /** Boot identity: /proc/stat btime (epoch seconds). Host speed

@@ -59,20 +59,6 @@ final case class GtsFrame(df: DataFrame) {
       .filter(col("__rn") <= count).drop("__rn"))
   }
 
-  /** FETCH gskip/gcount — series-level pagination (fn/FETCH.java:325-331
-    * and :1561-1584): skip the first `gskip` matching series, keep the
-    * next `gcount`, in series-id order (the reference sorts metadatas by
-    * their (classId, labelsId) SipHash pair, MetadataIdComparator; our
-    * stable `gtsid` plays that role). Rank runs on the DISTINCT series
-    * ids — metadata-scale, range-partitioned via [[RankOps.globalRank]],
-    * never a single-partition global sort — then a semi-join prunes the
-    * point table. */
-  def seriesPage(gskip: Long, gcount: Long): GtsFrame = {
-    if (gskip <= 0 && gcount == Long.MaxValue) return this
-    GtsFrame(df.join(GtsFrame.pageIds(df, gskip, gcount),
-      Seq("gtsid"), "left_semi"))
-  }
-
   /** FETCH per-point post-filters skip/timestep/step/sample/count, in
     * the reference's storage-scan order (StandaloneStoreClient.java:
     * 398-487 — the store iterates each series NEWEST-first):
@@ -1355,6 +1341,8 @@ object GtsFrame {
   val PageExtentCap = 1000000L
   def pageIds(ids: org.apache.spark.sql.DataFrame, gskip: Long,
               gcount: Long): org.apache.spark.sql.DataFrame = {
+    require(gskip >= 0 && gcount >= 0,
+      s"pageIds needs gskip >= 0 and gcount >= 0, got $gskip and $gcount")
     val hi = if (gcount >= Long.MaxValue - gskip) Long.MaxValue else gskip + gcount
     val distinctIds = ids.select(col("gtsid")).distinct()
     if (hi <= PageExtentCap) {
@@ -1368,6 +1356,27 @@ object GtsFrame {
         .globalRank(distinctIds, Seq(col("gtsid")))
         .filter(col("rank") > gskip && col("rank") <= hi)
         .select(col("gtsid"))
+  }
+
+  /** FETCH's paging-parameter floors (fn/FETCH.java:1489-1584): the
+    * one definition the word's map form and the HTTP fetch endpoint
+    * both validate against. */
+  val FetchParamMin: Map[String, Long] = Map(
+    "skip" -> 0L, "step" -> 1L, "timestep" -> 1L, "gskip" -> 0L, "gcount" -> 0L)
+
+  /** `n` when it meets parameter `k`'s floor, else the reference's
+    * IllegalArgumentException. */
+  def fetchParam(k: String, n: Long): Long = {
+    val min = FetchParamMin(k)
+    require(n >= min, s"FETCH Parameter '$k' must be >= $min.")
+    n
+  }
+
+  /** `d` when it is a valid FETCH sample rate, in ( 0.0, 1.0 ]. */
+  def fetchSample(d: Double): Double = {
+    require(d > 0.0 && d <= 1.0,
+      "FETCH Parameter 'sample' must be in the range ( 0.0, 1.0 ].")
+    d
   }
 
   /** Java double division (the reference's op.div applies `/` on

@@ -175,20 +175,15 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       val (pSkip, pStep, pTimestep, pSample, pType, pGskip, pGcount) =
         popped match {
           case params: Map[Any, Any] @unchecked =>
-            def longP(k: String, min: Long, default: Long): Long =
+            def longP(k: String, default: Long): Long =
               params.get(k) match {
-                case Some(n: Long) =>
-                  require(n >= min, s"FETCH Parameter '$k' must be >= $min.")
-                  n
+                case Some(n: Long) => fetchParam(k, n)
                 case Some(o) => throw new IllegalArgumentException(
                   s"FETCH Invalid type for parameter '$k': $o")
                 case None => default
               }
             val sample = params.get("sample") match {
-              case Some(d: Double) =>
-                require(d > 0.0 && d <= 1.0,
-                  "FETCH Parameter 'sample' must be in the range ( 0.0, 1.0 ].")
-                d
+              case Some(d: Double) => fetchSample(d)
               case Some(o) => throw new IllegalArgumentException(
                 s"FETCH Invalid type for parameter 'sample': $o")
               case None => 1.0
@@ -199,9 +194,9 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
                 "FETCH Invalid value for parameter 'type'.")
               t
             }
-            (longP("skip", 0L, 0L), longP("step", 1L, 1L),
-              longP("timestep", 1L, 1L), sample, typ,
-              longP("gskip", 0L, 0L), longP("gcount", 0L, Long.MaxValue))
+            (longP("skip", 0L), longP("step", 1L),
+              longP("timestep", 1L), sample, typ,
+              longP("gskip", 0L), longP("gcount", Long.MaxValue))
           case _ => (0L, 1L, 1L, 1.0, None, 0L, Long.MaxValue)
         }
       // selector forms (FETCH.java:1263-1284 map parse; :495-541 pair

@@ -242,12 +242,16 @@ final class RestFacade(
       require(q.get("count").isEmpty || tsCount.isEmpty,
         "fetch cannot combine 'count' with a negative 'timespan'")
       val countOpt = q.get("count").map(_.toLong).orElse(tsCount)
-      val skip = q.getOrElse("skip", "0").toLong
-      val step = q.getOrElse("step", "1").toLong
-      val timestep = q.getOrElse("timestep", "1").toLong
-      val sample = q.getOrElse("sample", "1.0").toDouble
-      val gskip = q.getOrElse("gskip", "0").toLong
-      val gcount = q.get("gcount").map(_.toLong).getOrElse(Long.MaxValue)
+      // same bounds and messages as the word's map form: an
+      // out-of-range page is the client's 400, never a plan error
+      def pageP(k: String, default: Long): Long =
+        q.get(k).map(v => GtsFrame.fetchParam(k, v.toLong)).getOrElse(default)
+      val skip = pageP("skip", 0L)
+      val step = pageP("step", 1L)
+      val timestep = pageP("timestep", 1L)
+      val sample = GtsFrame.fetchSample(q.getOrElse("sample", "1.0").toDouble)
+      val gskip = pageP("gskip", 0L)
+      val gcount = pageP("gcount", Long.MaxValue)
       val bPre = q.getOrElse("boundary.pre", "0").toInt
       val bPost = q.getOrElse("boundary.post", "0").toInt
       val all = combined().filter(sel.predicate)

@@ -159,6 +159,9 @@ class ExplainSpec extends SparkSpec {
     assert(fullPlan(unbounded).toLowerCase.contains("rangepartitioning"))
     assert(unbounded.collect().map(_.getLong(0)).sorted.toSeq ==
       (1 to 100).map(i => (i * 37L) % 101).distinct.sorted.drop(95))
+    // a negative extent is refused before it reaches limit()
+    intercept[IllegalArgumentException](graft.operators.GtsFrame.pageIds(ids, 0, -3))
+    intercept[IllegalArgumentException](graft.operators.GtsFrame.pageIds(ids, -1, 4))
   }
 
   test("globalRank with fewer rows than partitions still ranks densely") {

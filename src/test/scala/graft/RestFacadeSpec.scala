@@ -125,6 +125,26 @@ class RestFacadeSpec extends SparkSpec {
     } finally facade.stop()
   }
 
+  test("fetch: out-of-range paging params are a 400 with FETCH's bound message") {
+    val f = fixture
+    val facade = new RestFacade(f,
+      () => new WarpScriptEngine(
+        (cls, labels, a, b) => f.select(cls, labels).timeclip(a, b)))
+    val port = facade.start()
+    val base = s"http://127.0.0.1:$port/api/v0/fetch?selector=~.*&start=0&stop=1000"
+    try {
+      for ((param, min) <- Seq("gcount=-3" -> 0, "gskip=-1" -> 0, "step=0" -> 1)) {
+        val (code, body) = get(s"$base&$param")
+        val k = param.takeWhile(_ != '=')
+        assert(code == 400, s"$param: $code $body")
+        assert(body.contains(s"FETCH Parameter '$k' must be >= $min."), body)
+      }
+      // in-range paging still answers
+      val (ok, page) = get(s"$base&gskip=1&gcount=1&format=tsv")
+      assert(ok == 200 && page.split("\n").count(_.nonEmpty) == 1, page)
+    } finally facade.stop()
+  }
+
   test("exec: WarpScript program over real HTTP returns stack JSON") {
     val f = fixture
     val facade = new RestFacade(f,
